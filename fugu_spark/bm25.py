@@ -31,22 +31,6 @@ def idf_expr(df_col: Column, n_docs: int) -> Column:
     return F.log(1.0 + (F.lit(float(n_docs)) - dfd + 0.5) / (dfd + 0.5))
 
 
-def bm25_expr(
-    tf_col: Column,
-    df_col: Column,
-    doc_len_col: Column,
-    n_docs: int,
-    avgdl: float,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-) -> Column:
-    tf = tf_col.cast("double")
-    norm = F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * doc_len_col.cast("double") / F.lit(float(avgdl))
-    )
-    return idf_expr(df_col, n_docs) * tf * F.lit(k1 + 1.0) / (tf + norm)
-
-
 def idf_py(df: int, n_docs: int) -> float:
     """Pure-Python oracle — used by fixture tests (SURVEY.md §5.2)."""
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))

@@ -165,10 +165,6 @@ def generate_batch(indices: np.ndarray) -> pd.DataFrame:
     )
 
 
-def n_rows_for_sf(sf: float) -> int:
-    return max(1, int(5_000_000 * sf))
-
-
 def generate_corpus(
     spark: SparkSession, n_rows: int, n_partitions: int | None = None
 ) -> DataFrame:

@@ -40,11 +40,6 @@ from pyspark.sql import types as T
 # ---------------------------------------------------------------- derivation
 
 
-def normalize_facet(c: Column) -> Column:
-    """Ensure leading '/' (src/db/search.rs:594-600)."""
-    return F.when(c.startswith("/"), c).otherwise(F.concat(F.lit("/"), c))
-
-
 def derive_facets(*components: tuple[str, Column]) -> Column:
     """Build a facets array from (dimension_name, value_column) pairs:
     ``[('lang', col), ...] → ['/lang/<v>', ...]``; null values skipped."""

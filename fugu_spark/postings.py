@@ -26,7 +26,7 @@ from collections.abc import Iterator
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -159,11 +159,3 @@ def build_index(
         terms = terms.cache()
     stats = corpus_stats(docs, postings)
     return InvertedIndex(postings=postings, terms=terms, stats=stats)
-
-
-def load_documents_as_corpus(
-    spark: SparkSession, sf_dir: str, table: str = "documents"
-) -> DataFrame:
-    """Adapt the driver's ``documents(doc_id, text, lang, source, n_chars)``
-    table to the engine's corpus interface (id + text + facet-ish dims)."""
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")

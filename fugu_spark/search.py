@@ -389,35 +389,6 @@ def _synonym_leaves_frame(
     )
 
 
-def leaf_score_frames(
-    index: InvertedIndex, plan: QueryPlan, k1: float = BM25_K1, b: float = BM25_B
-) -> list[tuple[int, DataFrame | None]]:
-    """One (leaf_id, DataFrame(doc_id, score)) per leaf; None = term absent.
-    (Retained for inspection/tests; execute_plan uses the fused scan.)"""
-    terms = plan.all_terms()
-    cand = index.postings.filter(F.col("term").isin(terms))
-    df_map = _df_map(index, terms)
-    frames: list[tuple[int, DataFrame | None]] = []
-    for i, leaf in enumerate(plan.leaves):
-        if leaf.is_phrase:
-            frames.append((i, _phrase_frame(cand, leaf, df_map, index.stats, k1, b)))
-            continue
-        term = leaf.terms[0]
-        if term not in df_map:
-            frames.append((i, None))
-            continue
-        idf = idf_py(df_map[term], index.stats.n_docs)
-        frame = cand.filter(F.col("term") == term).select(
-            "doc_id",
-            (
-                F.lit(idf) * _tf_norm(F.col("tf"), F.col("doc_len"), index.stats.avgdl, k1, b)
-                * F.lit(leaf.boost)
-            ).alias("score"),
-        )
-        frames.append((i, frame))
-    return frames
-
-
 def _df_map(index: InvertedIndex, terms: list[str]) -> dict[str, int]:
     if index.df_map is not None:
         return {t: index.df_map[t] for t in terms if t in index.df_map}

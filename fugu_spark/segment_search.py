@@ -75,11 +75,6 @@ def _apply_delete_mask(si: SegmentIndex, decoded: DataFrame) -> DataFrame:
     )
 
 
-def _tf_norm_np(tf: np.ndarray, dl: np.ndarray, avgdl: float, k1: float, b: float) -> np.ndarray:
-    tf = tf.astype(np.float64)
-    return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl.astype(np.float64) / avgdl))
-
-
 def term_upper_bound(
     idf: float, max_tf: int, min_doc_len: int, avgdl: float, k1: float = BM25_K1, b: float = BM25_B
 ) -> float:

@@ -1,11 +1,26 @@
-"""Stage-level profiling of the segment build at a given local[N]."""
+"""Stage-level profiling of the segment build at a given local[N].
+
+Usage: python tools/profile_build.py CPUS [ROWS] [WORK_DIR]
+
+Generates ROWS (default 20,000) rows of the ``fugu_spark.corpus``
+generator, then times stage 1 (tokenize + postings write), stage 2
+(``encode_postings_df``) and stage 3 (dictionary merge) separately on
+local[CPUS]. Prints one JSON line.
+"""
 
 import json
+import os
 import shutil
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# the Python workers import the engine too
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [REPO] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+)
 
 from fugu_spark.corpus import generate_corpus
 from fugu_spark.postings import build_postings
@@ -14,9 +29,9 @@ from fugu_spark.session import get_spark
 from pyspark.sql import functions as F
 
 
-def main(cpus: int, rows: int):
+def main(cpus: int, rows: int, work: str):
     spark = get_spark(app_name=f"profile_{cpus}", master=f"local[{cpus}]")
-    base = f"/tmp/fugu_profile_{cpus}"
+    base = os.path.join(work, f"fugu_profile_{cpus}")
     shutil.rmtree(base, ignore_errors=True)
     t = {}
     t0 = time.time()
@@ -54,7 +69,12 @@ def main(cpus: int, rows: int):
     print(json.dumps({"cpus": cpus, "rows": rows, "n_postings": n_post,
                       "postings_per_sec": n_post / total, **{k: round(v, 2) for k, v in t.items()}}))
     spark.stop()
+    shutil.rmtree(base, ignore_errors=True)
 
 
 if __name__ == "__main__":
-    main(int(sys.argv[1]), int(sys.argv[2]) if len(sys.argv) > 2 else 20000)
+    main(
+        int(sys.argv[1]),
+        int(sys.argv[2]) if len(sys.argv) > 2 else 20000,
+        sys.argv[3] if len(sys.argv) > 3 else tempfile.gettempdir(),
+    )
