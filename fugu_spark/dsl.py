@@ -282,7 +282,7 @@ def search_dsl(index, dsl: dict, k: int = 10, mode: str = DEFAULT_MODE, **kwargs
     kwargs pass to execute_plan/top_k (docs=, k1=, b=, search_after=,
     offset=)."""
     from .queryparse import expand_plan
-    from .search import dict_expander, execute_plan, top_k
+    from .search import cap_top_k, dict_expander, execute_plan, top_k
 
     msm = 0
     if len(dsl) == 1 and "bool" in dsl and isinstance(dsl["bool"], dict):
@@ -293,5 +293,6 @@ def search_dsl(index, dsl: dict, k: int = 10, mode: str = DEFAULT_MODE, **kwargs
     plan = expand_plan(plan, dict_expander({None: index}))
     offset = kwargs.pop("offset", 0)
     search_after = kwargs.pop("search_after", None)
+    k, offset = cap_top_k(k, offset, index.stats.n_docs, plan, kwargs.get("docs"))
     scored = execute_plan(index, plan, min_should_match=msm, **kwargs)
     return top_k(scored, k=k, offset=offset, search_after=search_after)

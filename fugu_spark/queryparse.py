@@ -201,6 +201,23 @@ class QueryPlan:
             return any(occ != "must_not" for occ, _ in self.root.children)
         return any(l.occur != "must_not" for l in self.leaves)
 
+    def reads_universe(self) -> bool:
+        """Whether some clause matches from the doc universe rather than
+        from postings: AllQuery, a NOT-only query, or a NOT-only group
+        outside a must_not (each runs as all docs minus exclusions), so
+        it can return docs that have no postings."""
+        if self.is_all or not self.has_positive():
+            return True
+
+        def not_only(node: BoolNode) -> bool:
+            return all(occ == "must_not" for occ, _ in node.children) or any(
+                isinstance(c, BoolNode) and not_only(c)
+                for occ, c in node.children
+                if occ != "must_not"
+            )
+
+        return self.root is not None and not_only(self.root)
+
 
 class QueryParseError(ValueError):
     pass

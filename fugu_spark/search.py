@@ -1240,6 +1240,26 @@ def combined_fields_search(
     return top_k(per_doc.select("doc_id", "score"), k=k, offset=offset)
 
 
+def cap_top_k(
+    k: int | None, offset: int, n_docs: int, plan: QueryPlan, docs: DataFrame | None
+) -> tuple[int | None, int]:
+    """Cap a page at the index's document count (maxDoc), as Lucene's
+    IndexSearcher caps numHits: no query returns more rows than the index
+    holds docs. Spark's top-k (TakeOrderedAndProject → Guava TopKSelector)
+    allocates a 2·limit buffer per task before it reads a row, so an
+    uncapped ``k=10**9`` costs GBs of heap per task; capped, top-k memory
+    follows ``min(offset + k, n_docs)``. Returns ``(k, offset)`` with
+    ``offset + k <= max(n_docs, 1)``; a page that starts past the last doc
+    keeps an empty window. ``k=None`` (full set) and plans whose universe
+    is the ``docs`` table (it may hold docs with no postings, which
+    ``n_docs`` need not count) are returned unchanged."""
+    if k is None or (docs is not None and plan.reads_universe()):
+        return k, offset
+    cap = max(int(n_docs), 1)
+    offset = min(offset, cap)
+    return min(k, cap - offset), offset
+
+
 def top_k(
     scored: DataFrame,
     k: int = 10,
@@ -1349,6 +1369,10 @@ def search(
     relevance order (see top_k); O(k) at any page depth where offset is
     O(offset). Relevance order only (a field-sorted cursor would need
     nulls-last-aware predicates; use offset with sort_by).
+
+    A ``k`` (and ``offset + k``) above the index's document count
+    (maxDoc, ``index.stats.n_docs``) is capped to it, so top-k memory
+    follows ``min(offset + k, n_docs)``, not ``k``; see cap_top_k.
     """
     plan = parse_query(query_text, mode=mode)
     plan = expand_plan(plan, dict_expander({None: index}))
@@ -1356,6 +1380,7 @@ def search(
         from .queryparse import apply_synonyms
 
         plan = apply_synonyms(plan, synonyms, mode=mode)
+    k, offset = cap_top_k(k, offset, index.stats.n_docs, plan, docs)
     scored = execute_plan(
         index, plan, docs=docs, id_col=id_col, k1=k1, b=b,
         min_should_match=min_should_match,

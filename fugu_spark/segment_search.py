@@ -46,7 +46,7 @@ from .queryparse import (
     needs_expansion,
     parse_query,
 )
-from .search import execute_plan, top_k
+from .search import cap_top_k, execute_plan, top_k
 from .segments import SegmentIndex
 from .tokenizer import DEFAULT_MODE
 
@@ -693,6 +693,11 @@ def search_segments(
     MaxScore pruned path is skipped since score pruning is only
     rank-safe under a k budget.
 
+    A ``k`` above the index's document count (maxDoc, ``si.stats.n_docs``)
+    is capped to it before the path choice, so top-k memory follows
+    ``min(k, n_docs)``, not ``k`` — ``k=10**9`` asks for the ranked full
+    set at the matched set's cost (see search.cap_top_k).
+
     MaxScore/block-max pruning costs one extra θ-seeding job, so it only
     engages for pure-OR queries whose posting volume exceeds
     ``wand_min_postings`` — below that the exhaustive single-pass is
@@ -724,6 +729,7 @@ def search_segments(
         from .queryparse import apply_synonyms
 
         plan = apply_synonyms(plan, synonyms, mode=mode)
+    k, _ = cap_top_k(k, 0, si.stats.n_docs, plan, docs)
     spark = si.spark
 
     pure_or = (
@@ -756,15 +762,17 @@ def search_segments(
     need_pos = any(l.is_phrase for l in plan.leaves)
     meta = _term_meta(si, all_terms)
     live_terms = [t for t in all_terms if t in meta]
-    needs_universe = plan.is_all or (plan.leaves and not plan.has_positive())
+    needs_universe = plan.is_all or (plan.leaves and plan.reads_universe())
     ranges = None
     if needs_universe and docs is None:
-        # AllQuery / NOT-only over the bare index: the doc universe must
-        # come from the index itself — decode every live posting (this IS
-        # a full scan; that's the query's semantics). Docs whose text
-        # produced zero postings are unrepresentable here: pass `docs` to
-        # include them. Positions must ride along when the plan has a
-        # phrase (e.g. `NOT "foo bar"`) or the exclusion silently no-ops.
+        # AllQuery / NOT-only (or a NOT-only nested group, which would
+        # otherwise see only the docs holding a plan term) over the bare
+        # index: the doc universe must come from the index itself —
+        # decode every live posting (this IS a full scan; that's the
+        # query's semantics). Docs whose text produced zero postings are
+        # unrepresentable here: pass `docs` to include them. Positions
+        # must ride along when the plan has a phrase (e.g. `NOT "foo
+        # bar"`) or the exclusion silently no-ops.
         decoded = decode_all_postings(si, with_positions=need_pos)
     elif plan.is_all or not live_terms:
         decoded = spark.createDataFrame([], _DECODED_SCHEMA)

@@ -8,13 +8,15 @@ from fugu_spark.session import get_spark
 
 # The suite shares ONE session JVM across ~50 modules, and most module
 # fixtures cache() index frames they never unpersist. Bound the heap
-# (the engine default 48g lets RSS balloon over a long suite — the JVM
-# died ~25 min in on two full runs) and clear the block store between
-# modules so storage memory stays flat. 12g turned out too tight:
-# tests/test_serve.py alone OOMs the shared JVM at 12g (exact-count
-# distributed comparisons), killing every later test with
-# ConnectionRefused; 24g passes it standalone and keeps the suite cap
-# half the engine default.
+# (the engine default 48g lets RSS balloon over a long suite) and clear
+# the block store between modules so storage memory stays flat. The
+# JVM deaths once blamed on this cap (test_serve's TestCount killing
+# every later test with ConnectionRefused, at 12g and at 24g) were not
+# the suite's heap needs: its `search_segments(si, q, k=10**9)` sized
+# Spark's top-k buffer (Guava TopKSelector, Object[2k] per task) by k.
+# search.cap_top_k caps k at the index's document count; with it the
+# whole suite peaked at 7.4 GB resident (4-vCPU, 15 GB host), and 24g
+# stays half the engine default.
 os.environ.setdefault("FUGU_SPARK_DRIVER_MEM", "24g")
 
 

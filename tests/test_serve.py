@@ -180,6 +180,118 @@ class TestCount:
         assert ls.count("merge join") > len(ls.search("merge join", k=3))
 
 
+def _ranked(rows):
+    return sorted(((r.doc_id, r.score) for r in rows), key=lambda x: (-x[1], x[0]))
+
+
+def _assert_same_ranking(got, want):
+    assert [d for d, _ in got] == [d for d, _ in want]
+    for (d, gs), (_, ws) in zip(got, want):
+        assert gs == pytest.approx(ws, abs=1e-9), d
+
+
+def _reloaded(si):
+    """The index as it is on disk now: test_local_matches_distributed_after_upsert
+    has added a generation, and a SegmentIndex loaded before it pairs its
+    old n_docs with the new dictionary dfs (the upsert replaced docs with
+    the same text, so the oracle's match sets still hold)."""
+    from fugu_spark.segments import SegmentIndex
+
+    return SegmentIndex.load(si.spark, si.index_dir)
+
+
+class TestHugeK:
+    """A k above the index's document count asks for the whole ranked
+    matched set. It is capped at maxDoc (Spark's top-k buffer is sized by
+    the limit, not by the rows), and must return exactly the full set:
+    expectations come from the k=None frame and the oracle."""
+
+    @pytest.mark.parametrize("q, path_kwargs", [
+        ("merge join scan", {"wand_min_postings": 1}),  # MaxScore θ-seed
+        ("merge", {"wand_min_postings": 1}),  # single live term: heap_topk
+        ("merge AND join", {}),  # exhaustive top_k
+    ], ids=["maxscore", "heap_topk", "top_k"])
+    def test_segments_huge_k_is_full_ranked_set(self, setup, q, path_kwargs):
+        _, si, _, oracle = setup
+        si = _reloaded(si)
+        want = _ranked(search_segments(si, q, k=None).collect())
+        assert {d for d, _ in want} == {d for d, _ in oracle.search(q, k=10**9)}
+        got = [(r.doc_id, r.score) for r in search_segments(si, q, k=10**9, **path_kwargs).collect()]
+        _assert_same_ranking(got, want)
+
+    def test_segments_huge_k_sort_by(self, setup):
+        corpus, si, _, oracle = setup
+        si = _reloaded(si)
+        q = "merge join"
+        full = {r.doc_id: r.score for r in search_segments(si, q, k=None).collect()}
+        assert set(full) == {d for d, _ in oracle.search(q, k=10**9)}
+        path = {r.doc_id: r.path for r in corpus.select("doc_id", "path").collect()}
+        want = sorted(sorted(full), key=lambda d: path[d], reverse=True)  # ties: doc_id ASC
+        got = search_segments(si, q, k=10**9, docs=corpus, sort_by="path").collect()
+        assert [r.doc_id for r in got] == want
+        for r in got:
+            assert r.sort_key == path[r.doc_id]
+            assert r.score == pytest.approx(full[r.doc_id], abs=1e-9)
+
+    def test_search_huge_k_and_offset(self, setup):
+        from fugu_spark.dsl import search_dsl
+        from fugu_spark.postings import build_index
+        from fugu_spark.search import search
+
+        corpus, _, _, oracle = setup
+        idx = build_index(corpus, id_col="doc_id", text_col="content")
+        q = "merge join"
+        want = oracle.search(q, k=10**9)
+        _assert_same_ranking(_ranked(search(idx, q, k=10**9).collect()), want)
+        _assert_same_ranking(_ranked(search(idx, q, k=10**9, offset=5).collect()), want[5:])
+        assert search(idx, q, k=10**9, offset=10**6).collect() == []
+        dsl = {"bool": {"should": [{"term": {"_all": "merge"}}, {"term": {"_all": "join"}}]}}
+        _assert_same_ranking(_ranked(search_dsl(idx, dsl, k=10**9).collect()), want)
+        # field-sorted page: offset + huge k through top_k_by_field
+        path = {r.doc_id: r.path for r in corpus.select("doc_id", "path").collect()}
+        order = sorted(sorted(d for d, _ in want), key=lambda d: path[d], reverse=True)
+        got = search(idx, q, k=10**9, offset=3, docs=corpus, sort_by="path").collect()
+        assert [r.doc_id for r in got] == order[3:]
+
+    def test_universe_plans(self, spark, tmp_path):
+        """compact() counts only docs with postings, so a docs table with
+        empty-text docs holds more docs than n_docs: plans that draw on
+        that universe (NOT-only, or a NOT-only nested group) keep k. With
+        no docs table the universe is every doc with postings, for the
+        nested group too, not only the docs holding a plan term."""
+        from fugu_spark.segments import compact
+
+        texts = ["alpha beta", "beta gamma", "", "gamma delta", "alpha", "beta", ""]
+        docs = spark.createDataFrame(list(enumerate(texts, 1)), "doc_id long, text string")
+        si = compact(build_segments(docs, str(tmp_path / "idx"), text_col="text", n_buckets=2))
+        assert si.stats.n_docs == 5
+        for q, want in [("NOT zzz", {1, 2, 3, 4, 5, 6, 7}),
+                        ("(NOT delta NOT zzz) OR alpha", {1, 2, 3, 5, 6, 7})]:
+            got = {r.doc_id for r in search_segments(si, q, k=10, docs=docs).collect()}
+            assert got == want, q
+            bare = {r.doc_id for r in search_segments(si, q, k=10).collect()}
+            assert bare == want - {3, 7}, q
+
+    def test_cap_top_k(self):
+        from fugu_spark.queryparse import parse_query
+        from fugu_spark.search import cap_top_k
+
+        pos = parse_query("merge join")
+        assert cap_top_k(10**9, 0, 200, pos, None) == (200, 0)
+        assert cap_top_k(10, 0, 200, pos, None) == (10, 0)
+        assert cap_top_k(10**9, 150, 200, pos, None) == (50, 150)
+        assert cap_top_k(10, 10**6, 200, pos, None) == (0, 200)  # empty page
+        assert cap_top_k(10**9, 0, 0, pos, None) == (1, 0)
+        assert cap_top_k(None, 0, 200, pos, None) == (None, 0)  # full set
+        docs = object()  # only its presence matters
+        assert cap_top_k(10**9, 0, 200, pos, docs) == (200, 0)
+        # the docs table is the universe: it may hold docs with no
+        # postings, which n_docs need not count — left uncapped
+        for q in ["", "NOT merge", "(NOT merge NOT sort) OR join"]:
+            assert cap_top_k(10**9, 0, 200, parse_query(q), docs) == (10**9, 0), q
+            assert cap_top_k(10**9, 0, 200, parse_query(q), None) == (200, 0), q
+
+
 class TestSearchPinned:
     """Served pinned query: pins lead in order with the ladder scores,
     organic tail deduped — oracle-derived expectations."""
